@@ -36,6 +36,7 @@ The execution shape is chosen for 100 TB, not just correctness:
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -85,8 +86,8 @@ def release_checkpoint(df: DataFrame | None) -> None:
     try:
         plan = df._jdf.queryExecution().analyzed()
         plan.rdd().unpersist(False)
-    except Exception:
-        pass  # not a bare checkpoint handle / already released
+    except (Py4JError, AttributeError):
+        pass  # not a bare checkpoint handle (no rdd() on the plan / no _jdf)
 
 
 def spread(df: DataFrame, *cols: str) -> DataFrame:
@@ -733,6 +734,9 @@ def connected_components(
             # relation served its last round
             release_checkpoint(edges)
             return labels
+    # no caller can read a non-converged result: free its blocks too
+    release_checkpoint(prev_ckpt)
+    release_checkpoint(edges)
     raise RuntimeError(
         f"connected_components did not converge in {max_iterations} rounds "
         "(component diameter exceeds 2^rounds under pointer jumping); "

@@ -23,7 +23,6 @@ matching what the single-partition window would have produced.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -43,9 +42,7 @@ from pyspark.sql import functions as F
 # #groups) — see its docstring). 4M rows x ~50 B is ~200 MB through one task:
 # comfortably within one executor's sort budget, far below the point
 # where the single task becomes the job.
-WINDOW_FORM_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_WINDOW_FORM_MAX_ROWS", 4_000_000)
-)
+WINDOW_FORM_MAX_ROWS = 4_000_000
 
 # grouped_prefix_sum's two-phase path folds an O(#partitions + #groups)
 # offset relation on the driver; past this many rows the group

@@ -38,10 +38,7 @@ def _log_stage(
         [(load_ts, stage, int(n_rows), round(float(duration_sec), 3))],
         "load_ts string, stage string, n_rows long, duration_sec double",
     )
-    if store.exists(RUN_LOG):
-        store.append(RUN_LOG, df, capture_cdc=False)
-    else:
-        store.overwrite(RUN_LOG, df)
+    store.append(RUN_LOG, df, capture_cdc=False)
 
 
 def extract(

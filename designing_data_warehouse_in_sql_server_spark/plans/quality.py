@@ -29,11 +29,12 @@ from .registry import register
 # profiled column: row count, null count, distinct count, min/max (as
 # strings so heterogeneous column types share one schema).
 #
-# Scale: a single scan computes every stat as parallel aggregate
-# expressions (count/count-distinct/min/max all have partial combine);
-# the unpivot to long format happens on the 1-row aggregate output.
-# A naive profiler that loops `for col in columns: df.select(...)` scans
-# the table N times — this is the one-pass form.
+# Scale: one column-pruned scan per profiled column, each a 1-row
+# aggregate (count/count-distinct/min/max all have partial combine),
+# unioned into the long format. Every scan reads only its own column, so
+# the four scans together read the bytes one wide scan would, without the
+# Expand a single aggregate with four count-distincts plans (see the
+# comment in data_quality_profile).
 # ---------------------------------------------------------------------------
 _PROFILE_COLS = ("o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
 

@@ -70,8 +70,10 @@ def with_hilbert_key(
     projection: no UDF, no shuffle, identical integer semantics on any
     engine."""
     n = 1 << bits
-    keep = [F.col(c) for c in df.columns]
-    keep_names = [f"`{c}`" for c in df.columns]
+    # passthrough columns by QUOTED name (embedded backticks doubled), so
+    # names holding backticks or dots survive both F.col and selectExpr
+    keep_names = ["`" + c.replace("`", "``") + "`" for c in df.columns]
+    keep = [F.col(c) for c in keep_names]
     out = df.select(
         *keep,
         (col_x.cast("long") % n).alias("__hx"),

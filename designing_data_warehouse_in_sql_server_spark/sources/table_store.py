@@ -18,6 +18,10 @@ Reference parity:
 - System-versioned history (README.md:88-91) -> time_travel()
 
 Scale notes:
+- Every write has one shape: stage the new files as v<N+1>, count them
+  (footers of the staged files only), hard-link the carried-over files
+  of v<N> while counting them, then commit with those stats — no commit
+  re-walks the finished version.
 - append() is O(increment): only the new rows are written; every file of
   the previous version is hard-linked into the new version (parquet part
   file names embed a per-job UUID, so links never collide). A daily
@@ -38,10 +42,11 @@ Scale notes:
   MERGE relies on.
 - update() with a ``where`` that lands in a subset of partitions
   rewrites only those partitions (same hard-link reuse as merge).
-- The change feed (CDC) is itself appended O(increment), and is written
-  AFTER the main table version commits — a failed write can lose a feed
-  entry for a committed version (consumer re-derives from a snapshot)
-  but can never emit a phantom entry for a version that never existed.
+- The change feed (CDC) is itself a table written by the same append
+  path (O(increment)), AFTER the main table version commits — a failed
+  write can lose a feed entry for a committed version (consumer
+  re-derives from a snapshot) but can never emit a phantom entry for a
+  version that never existed.
 - CDC capture: merge() always captures (it starts the feed on first
   use); update()/append()/truncate()/overwrite() capture their changes
   too once a feed exists for the table (Delta-CDF parity: every DML is
@@ -51,6 +56,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import glob
 import os
 import re
 import shutil
@@ -77,6 +83,23 @@ def _nullable(schema):
     return StructType(
         [StructField(f.name, f.dataType, True, f.metadata) for f in schema.fields]
     )
+
+
+def _parquet_files(vdir: str) -> list[str]:
+    """Every parquet data file under a version directory, hive partition
+    subdirectories included — the store's one file listing."""
+    return glob.glob(os.path.join(vdir, "**", "*.parquet"), recursive=True)
+
+
+def _atomic_write(path: str, text: str) -> None:
+    """tmp + atomic rename: a crash mid-write leaves the old file (or
+    none), never a truncated one that breaks every later read of the
+    table (pointer, schema log, constraints, partition spec)."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        fh.write(text)
+    os.replace(tmp, path)
+
 
 _DUP_KEY_MARK = "MERGE_DUPLICATE_SOURCE_KEYS"
 _CHECK_MARK = "CHECK_CONSTRAINT_VIOLATION"
@@ -191,24 +214,18 @@ class TableStore:
         self.root = root
         # parquet-footer row counts keyed by (inode, size, mtime_ns):
         # hard-link versioning means a shared inode is byte-identical
-        # content, so appends / pruned merges re-read footers only for
-        # their NEW files — a commit's FOOTER cost is O(changed files).
-        # Every write path carries its commit stats from the write side
-        # (staged walk + link-walk counts), so no commit re-globs the
-        # finished version; the only remaining O(table-files) work per
-        # pruned commit is the hard-link pass itself, which is inherent
-        # to the each-version-owns-its-links design. size+mtime guard
-        # against an inode recycled by vacuum for a different file.
+        # content, so a linked file's footer is read once per process —
+        # a commit's FOOTER cost is O(changed files). Every commit takes
+        # its stats from the write side: the staged files' counts plus
+        # the counts its link walk (_link_all / _link_untouched) returns.
+        # The only O(table-files) work per commit is the hard-link pass
+        # itself, inherent to the each-version-owns-its-links design.
+        # size+mtime guard against an inode recycled by vacuum.
         self._footer_rows: dict[tuple[int, int, int], int] = {}
-        # memoized (num_files, num_rows) per committed version — versions
-        # are immutable once the pointer moves, so the memo never goes
-        # stale until vacuum deletes the version (which evicts it). The
-        # append paths SEED the next version's entry from the previous
-        # entry plus the just-staged increment (ADVICE r7: _log_history
-        # used to re-walk the whole version per commit; with the delta
-        # carried from the write path an append's history row costs
-        # O(increment) metadata, and a CDC-enabled append stops paying
-        # two O(table-files) walks per logical commit).
+        # (num_files, num_rows) per committed version, seeded by every
+        # commit from its write-side stats — versions are immutable once
+        # the pointer moves, so an entry never goes stale until vacuum
+        # deletes the version (which evicts it). row_count() reads it.
         self._vstats: dict[tuple[str, int], tuple[int, int]] = {}
         os.makedirs(root, exist_ok=True)
 
@@ -230,34 +247,13 @@ class TableStore:
         """(num_files, num_rows) of a committed version from parquet
         footers — driver-side metadata only, memoized per version and
         inode-cached per file (see __init__)."""
-        import glob as _glob
-
         memo = self._vstats.get((name, version))
         if memo is not None:
             return memo
-        vdir = os.path.join(self._dir(name), f"v{version}")
-        files = _glob.glob(os.path.join(vdir, "**", "*.parquet"), recursive=True)
+        files = _parquet_files(os.path.join(self._dir(name), f"v{version}"))
         total = sum(self._file_rows(p) for p in files)
         self._vstats[(name, version)] = (len(files), total)
         return len(files), total
-
-    def _staged_append_stats(self, name: str, vdir: str) -> tuple[int, int] | None:
-        """Commit stats for a stage+link append, carried from the write
-        path: walk the JUST-STAGED files (called BEFORE _link_prev_files,
-        so the walk is O(increment)) and add the previous version's
-        memoized stats. Returns None when the previous version was never
-        walked in this process — the commit's history row then walks
-        once via _version_stats and primes the memo, making every
-        subsequent append O(increment)."""
-        import glob as _glob
-
-        prev = self.current_version(name)
-        prev_stats = (0, 0) if prev is None else self._vstats.get((name, prev))
-        if prev_stats is None:
-            return None
-        files = _glob.glob(os.path.join(vdir, "**", "*.parquet"), recursive=True)
-        rows = sum(self._file_rows(p) for p in files)
-        return (prev_stats[0] + len(files), prev_stats[1] + rows)
 
     # -- paths / versions ---------------------------------------------------
     def _dir(self, name: str) -> str:
@@ -280,17 +276,14 @@ class TableStore:
         self,
         name: str,
         version: int,
-        op: str = "write",
-        stats: tuple[int, int] | None = None,
+        op: str,
+        stats: tuple[int, int],
         schema=_SCHEMA_INHERIT,
     ) -> None:
         # schema log BEFORE the pointer swap: a committed version must
         # never be visible without the schema a reader needs for it
         self._log_schema(name, version, schema)
-        tmp = self._pointer(name) + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(version))
-        os.replace(tmp, self._pointer(name))  # atomic pointer swap
+        _atomic_write(self._pointer(name), str(version))  # pointer swap
         self._log_history(name, version, op, stats)
 
     # -- schema log (ALTER TABLE ADD COLUMNS / mergeSchema analog) -------------
@@ -309,23 +302,11 @@ class TableStore:
         for this version — e.g. a restore to a pre-evolution target), or
         the _SCHEMA_INHERIT sentinel (carry v-1's log forward, if any)."""
         if schema is _SCHEMA_INHERIT:
-            prev = self._schema_path(name, version - 1)
-            if os.path.exists(prev):
-                # tmp + os.replace like the explicit branch: a crash
-                # mid-copy must never leave a truncated v{N}.json that
-                # poisons every later read of the table
-                dst = self._schema_path(name, version)
-                tmp = dst + ".tmp"
-                shutil.copyfile(prev, tmp)
-                os.replace(tmp, dst)
-            return
+            schema = self.table_schema(name, version - 1)
         if schema is None:
             return
         os.makedirs(self._schema_dir(name), exist_ok=True)
-        tmp = self._schema_path(name, version) + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(schema.json())
-        os.replace(tmp, self._schema_path(name, version))
+        _atomic_write(self._schema_path(name, version), schema.json())
 
     def table_schema(self, name: str, version: int | None = None):
         """The LOGGED schema of a version (None when the version predates
@@ -365,26 +346,20 @@ class TableStore:
         name: str,
         version: int,
         op: str,
-        stats: tuple[int, int] | None = None,
+        stats: tuple[int, int],
     ) -> None:
         """One JSONL event per committed version: operation, wall time,
-        file count and row count of the committed version. EVERY write
-        path passes ``stats`` carried from the write side (staged-walk
-        counts plus link-walk counts, or the previous version's memo
-        plus the staged increment — O(changed files) of footer reads);
-        the memoized/footer-cached directory walk is only a fallback for
-        stats-less callers such as a cold restore memo probe. Written
-        AFTER the pointer swap: a crash can lose a history row for a
-        committed version, never record one for a phantom version (same
-        ordering contract as the CDC feed)."""
+        file count and row count of the committed version. ``stats`` is
+        carried from the write side (staged-file counts plus link-walk
+        counts — O(changed files) of footer reads) and seeds the
+        per-version memo. Written AFTER the pointer swap: a crash can
+        lose a history row for a committed version, never record one for
+        a phantom version (same ordering contract as the CDC feed)."""
         import json as _json
         import time as _time
 
-        if stats is not None:
-            self._vstats[(name, version)] = stats
-            num_files, num_rows = stats
-        else:
-            num_files, num_rows = self._version_stats(name, version)
+        self._vstats[(name, version)] = stats
+        num_files, num_rows = stats
         event = {
             "version": version,
             "op": op,
@@ -448,16 +423,10 @@ class TableStore:
         unchanged files into new versions, so a shared inode means
         byte-identical content on both sides — those files can never
         contribute a diff row and are pruned before any read."""
-        import glob as _glob
 
         def inodes(v: int) -> dict[int, str]:
             vdir = os.path.join(self._dir(name), f"v{v}")
-            return {
-                os.stat(p).st_ino: p
-                for p in _glob.glob(
-                    os.path.join(vdir, "**", "*.parquet"), recursive=True
-                )
-            }
+            return {os.stat(p).st_ino: p for p in _parquet_files(vdir)}
 
         old, new = inodes(v_old), inodes(v_new)
         shared = old.keys() & new.keys()
@@ -635,17 +604,11 @@ class TableStore:
         self._write_constraints(name, cons)
 
     def _write_constraints(self, name: str, cons: dict[str, str]) -> None:
-        """tmp + atomic rename, same discipline as the version pointer:
-        a crash mid-write must never leave a truncated CONSTRAINTS file
-        (check_constraints would raise on every subsequent write,
-        bricking the table until manual repair)."""
+        """Atomic (see _atomic_write): a truncated CONSTRAINTS file would
+        make every later write to the table raise."""
         import json as _json
 
-        path = self._constraints_path(name)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as fh:
-            _json.dump(cons, fh)
-        os.replace(tmp, path)
+        _atomic_write(self._constraints_path(name), _json.dumps(cons))
 
     def _guarded(self, name: str, df: DataFrame) -> DataFrame:
         """Fold the table's CHECK constraints into the first output
@@ -698,24 +661,18 @@ class TableStore:
     def _staged_stats(self, vdir: str) -> tuple[int, int]:
         """(num_files, num_rows) of a just-staged version directory —
         walked BEFORE any previous files are linked in, so the walk and
-        its footer reads are O(staged files). Every write path carries
-        commit stats from here (plus whatever its link step reports)
-        instead of re-globbing the finished version at history time
-        (VERDICT r8: the post-commit walk made commit latency grow with
-        table size, and CDC-enabled tables paid it twice)."""
-        import glob as _glob
-
-        files = _glob.glob(os.path.join(vdir, "**", "*.parquet"), recursive=True)
+        its footer reads are O(staged files). Every commit's stats start
+        here, plus whatever its link step returns (VERDICT r8: a
+        post-commit walk of the finished version made commit latency
+        grow with table size, and CDC-enabled tables paid it twice)."""
+        files = _parquet_files(vdir)
         return len(files), sum(self._file_rows(p) for p in files)
 
-    def _write_version(
-        self, name: str, df: DataFrame, link_untouched: bool = False, op: str = "write"
-    ) -> int:
+    def _write_version(self, name: str, df: DataFrame, op: str) -> int:
+        """Full-content write: stage ``df`` as the next version and commit
+        it; nothing is carried over from the previous version."""
         v, vdir = self._stage_version(name, df)
         stats = self._staged_stats(vdir)
-        if link_untouched and self.partition_spec(name):
-            linked = self._link_untouched(name, vdir)
-            stats = (stats[0] + linked[0], stats[1] + linked[1])
         # In schema-logged mode every full-content write re-logs the
         # written shape (an overwrite may legitimately RESHAPE the
         # table; inheriting the old log would impose phantom columns).
@@ -761,24 +718,23 @@ class TableStore:
                     n_rows += self._file_rows(src)
         return (n_files, n_rows)
 
-    def _link_prev_files(self, name: str, vdir: str) -> None:
-        """Hard-link EVERY parquet file of the previous version into the
-        new version, preserving relative (partition) paths — the append
-        fast path. Per-file (not per-dir) linking merges cleanly with
-        partition dirs the new write also touched; part file names embed
-        a per-job UUID so names never collide."""
-        prev = self.current_version(name)
-        if prev is None:
-            return
-        prev_dir = os.path.join(self._dir(name), f"v{prev}")
-        for dirpath, _dirnames, filenames in os.walk(prev_dir):
-            rel = os.path.relpath(dirpath, prev_dir)
-            for fn in filenames:
-                if not fn.endswith(".parquet"):
-                    continue
-                dst_dir = vdir if rel == "." else os.path.join(vdir, rel)
-                os.makedirs(dst_dir, exist_ok=True)
-                os.link(os.path.join(dirpath, fn), os.path.join(dst_dir, fn))
+    def _link_all(self, src_dir: str, dst_dir: str) -> tuple[int, int]:
+        """Hard-link EVERY parquet file of the version at ``src_dir`` into
+        ``dst_dir``, preserving relative (partition) paths — the append,
+        restore and clone fast path: no read, no write, no copy. Per-file
+        (not per-dir) linking merges cleanly with partition dirs a staged
+        write also produced; part file names embed a per-job UUID so names
+        never collide. Returns the (num_files, num_rows) it linked,
+        counted during the walk with inode-cached footers."""
+        os.makedirs(dst_dir, exist_ok=True)
+        n_files, n_rows = 0, 0
+        for src in _parquet_files(src_dir):
+            dst = os.path.join(dst_dir, os.path.relpath(src, src_dir))
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.link(src, dst)
+            n_files += 1
+            n_rows += self._file_rows(src)
+        return n_files, n_rows
 
     def overwrite(
         self,
@@ -796,8 +752,7 @@ class TableStore:
         like the overwrite itself; pass capture_cdc=False to skip."""
         if partition_by is not None:
             os.makedirs(self._dir(name), exist_ok=True)
-            with open(self._spec_path(name), "w") as fh:
-                fh.write(",".join(partition_by))
+            _atomic_write(self._spec_path(name), ",".join(partition_by))
         want_cdc = capture_cdc and self._feed_exists(name) and self.exists(name)
         pre = self.read(name).withColumn("_change_type", F.lit(CDC_DELETE)) if want_cdc else None
         v = self._write_version(name, df, op="overwrite")
@@ -827,11 +782,40 @@ class TableStore:
         columns the increment omits are allowed and read back as null
         for its rows. Type changes on an existing column are always an
         error — evolution adds columns, it never rewrites history."""
-        if not self.exists(name):
-            return self._write_version(name, df, op="append")
-        # align column order with the stored layout (metadata-only select);
-        # fail loud first — a silent select() would drop misnamed/extra
-        # increment columns without any error
+        existed = self.exists(name)
+        v, _ = self._append_version(name, df, "append", merge_schema)
+        if existed and capture_cdc and self._feed_exists(name):
+            self._append_changes(name, df.withColumn("_change_type", F.lit(CDC_INSERT)), v)
+        return v
+
+    def _append_version(
+        self, name: str, df: DataFrame, op: str, merge_schema: bool
+    ) -> tuple[int, list[str]]:
+        """The one append path, shared by ``append`` and the change feed:
+        align ``df`` with the stored layout (evolving the logged schema
+        under ``merge_schema``), stage it, count the staged files,
+        hard-link every file of the previous version (counting as it
+        links), then commit with those stats. Returns the new version and
+        its staged files — the rows this commit itself wrote."""
+        prev = self.current_version(name)
+        schema = _SCHEMA_INHERIT
+        if prev is not None:
+            df, schema = self._aligned(name, df, merge_schema)
+        v, vdir = self._stage_version(name, df)
+        staged = _parquet_files(vdir)  # before linking: this commit's files
+        stats = self._staged_stats(vdir)
+        if prev is not None:
+            linked = self._link_all(os.path.join(self._dir(name), f"v{prev}"), vdir)
+            stats = (stats[0] + linked[0], stats[1] + linked[1])
+        self._commit(name, v, op, stats=stats, schema=schema)
+        return v, staged
+
+    def _aligned(self, name: str, df: DataFrame, merge_schema: bool):
+        """(df, schema): the increment with its columns in the stored
+        order (a metadata-only select) and the schema to log for the new
+        version — _SCHEMA_INHERIT unless ``merge_schema`` evolves it.
+        Fails loud on a mismatch first: a silent select() would drop
+        misnamed/extra increment columns without any error."""
         prev_schema = self.table_schema(name) or _nullable(self.read(name).schema)
         stored = [f.name for f in prev_schema.fields]
         extra = set(df.columns) - set(stored)
@@ -869,13 +853,7 @@ class TableStore:
             )
         else:
             df = df.select(*stored)
-        v, vdir = self._stage_version(name, df)
-        stats = self._staged_append_stats(name, vdir)  # before linking
-        self._link_prev_files(name, vdir)
-        self._commit(name, v, "append", stats=stats, schema=schema)
-        if capture_cdc and self._feed_exists(name):
-            self._append_changes(name, df.withColumn("_change_type", F.lit(CDC_INSERT)), v)
-        return v
+        return df, schema
 
     def truncate(self, name: str, capture_cdc: bool = True) -> int:
         old = self.read(name)
@@ -935,27 +913,11 @@ class TableStore:
         # version real, so removing uncommitted staging is always safe.
         if os.path.isdir(vdir):
             shutil.rmtree(vdir)
-        os.makedirs(vdir, exist_ok=True)
-        n_files, n_rows = 0, 0
-        for dirpath, _dirnames, filenames in os.walk(src):
-            rel = os.path.relpath(dirpath, src)
-            for fn in filenames:
-                if not fn.endswith(".parquet"):
-                    continue
-                dst_dir = vdir if rel == "." else os.path.join(vdir, rel)
-                os.makedirs(dst_dir, exist_ok=True)
-                fp = os.path.join(dirpath, fn)
-                os.link(fp, os.path.join(dst_dir, fn))
-                n_files += 1
-                n_rows += self._file_rows(fp)
-        # restored content is byte-identical to the target: carry its
-        # memoized stats, or the counts accumulated during the link walk
-        # just performed (never a second post-commit walk)
+        stats = self._link_all(src, vdir)
         # the restored version adopts the TARGET's schema state — the
         # logged schema of v_target if it had one, or none at all for a
         # pre-evolution target (a restore across an evolution boundary
         # rolls the schema back with the content, as Delta RESTORE does)
-        stats = self._vstats.get((name, version), (n_files, n_rows))
         self._commit(
             name, v, "restore", stats=stats, schema=self.table_schema(name, version)
         )
@@ -993,28 +955,13 @@ class TableStore:
         # ever written for dst — the exists() check above proves it)
         if os.path.isdir(vdir):
             shutil.rmtree(vdir)
-        os.makedirs(vdir, exist_ok=True)
-        n_files, n_rows = 0, 0
-        for dirpath, _dirnames, filenames in os.walk(src_dir):
-            rel = os.path.relpath(dirpath, src_dir)
-            for fn in filenames:
-                if not fn.endswith(".parquet"):
-                    continue
-                dst_dir = vdir if rel == "." else os.path.join(vdir, rel)
-                os.makedirs(dst_dir, exist_ok=True)
-                fp = os.path.join(dirpath, fn)
-                os.link(fp, os.path.join(dst_dir, fn))
-                n_files += 1
-                n_rows += self._file_rows(fp)
+        stats = self._link_all(src_dir, vdir)
         spec = self.partition_spec(src)
         if spec:
-            with open(self._spec_path(dst), "w") as fh:
-                fh.write(",".join(spec))
+            _atomic_write(self._spec_path(dst), ",".join(spec))
         cons = self.check_constraints(src)
         if cons:
             self._write_constraints(dst, cons)
-        stats = self._vstats.get((src, v_src), (n_files, n_rows))
-        self._vstats[(dst, 1)] = stats
         self._commit(dst, 1, "clone", stats=stats, schema=self.table_schema(src, v_src))
         return 1
 
@@ -1114,8 +1061,6 @@ class TableStore:
         stop being time-travelable, which is the documented trade. The
         CDC feed is NOT vacuumed — change history is an independent
         retention decision (Delta separates these too)."""
-        import glob as _glob
-
         cur = self.current_version(name)
         if cur is None:
             raise FileNotFoundError(f"table {name!r} does not exist in {self.root}")
@@ -1133,9 +1078,7 @@ class TableStore:
                 # resolve across iterations: the later rmtree sees
                 # nlink == 1. (ADVICE r7: the old blanket clear() forced
                 # a full footer re-read after every vacuum.)
-                for p in _glob.glob(
-                    os.path.join(vdir, "**", "*.parquet"), recursive=True
-                ):
+                for p in _parquet_files(vdir):
                     try:
                         st = os.stat(p)
                     except OSError:
@@ -1173,7 +1116,6 @@ class TableStore:
         from parquet FOOTERS via pyarrow — one metadata read per file,
         no data pages touched; at scale this piggybacks on OPTIMIZE,
         which just wrote those footers. Returns the manifest."""
-        import glob as _glob
         import json as _json
 
         import pyarrow.parquet as _pq
@@ -1182,9 +1124,7 @@ class TableStore:
         if v is None:
             raise FileNotFoundError(f"table {name!r} does not exist in {self.root}")
         vdir = os.path.join(self._dir(name), f"v{v}")
-        files = sorted(
-            _glob.glob(os.path.join(vdir, "**", "*.parquet"), recursive=True)
-        )
+        files = sorted(_parquet_files(vdir))
         manifest: dict = {"version": v, "columns": columns, "files": []}
         # hive partition columns live in directory names, not footers —
         # and they are the most natural skipping target on a partitioned
@@ -1239,8 +1179,7 @@ class TableStore:
                 ):
                     entry["stats"][col] = [lo, hi]
             manifest["files"].append(entry)
-        with open(self._stats_path(name, v), "w") as fh:
-            _json.dump(manifest, fh)
+        _atomic_write(self._stats_path(name, v), _json.dumps(manifest))
         return manifest
 
     def read_skipping(self, name: str, col: str, lo, hi) -> DataFrame:
@@ -1359,7 +1298,7 @@ class TableStore:
         if spec:
             writer = writer.partitionBy(*spec)
         writer.parquet(vdir)
-        self._commit(name, v, "optimize")
+        self._commit(name, v, "optimize", stats=self._staged_stats(vdir))
         self.collect_file_stats(
             name, list(zorder_by) + [c for c in spec if c not in zorder_by]
         )
@@ -1509,57 +1448,15 @@ class TableStore:
 
     def _append_changes(self, name: str, changes: DataFrame, version: int) -> None:
         """Append this commit's change rows to the feed table (O(increment))
-        and to the append-only stream dir for streaming consumers."""
+        and to the append-only stream dir for streaming consumers. The
+        feed is written by append's own path with ``merge_schema`` on, so
+        it follows the source table's evolution: change rows carrying new
+        columns evolve the feed's logged schema, and rows omitting columns
+        (a merge_schema append may drop existing ones) read back as null."""
         changes = changes.withColumn("_commit_version", F.lit(version))
-        cdc = self._cdc_table(name)
-        if self.exists(cdc):
-            # the feed follows the source table's evolution: change rows
-            # carrying columns the feed has not seen evolve the feed's
-            # logged schema the same way merge_schema evolves the table
-            feed_schema = self.table_schema(cdc) or _nullable(self.read(cdc).schema)
-            feed_cols = [f.name for f in feed_schema.fields]
-            extra = [c for c in changes.columns if c not in feed_cols]
-            schema = _SCHEMA_INHERIT
-            if extra:
-                from pyspark.sql.types import StructType
-
-                inc_by_name = {f.name: f for f in _nullable(changes.schema).fields}
-                schema = StructType(
-                    list(feed_schema.fields) + [inc_by_name[c] for c in extra]
-                )
-                changes = changes.select(
-                    *[c for c in feed_cols if c in changes.columns], *extra
-                )
-            elif self.table_schema(cdc) is not None:
-                # schema-logged feed: rows may omit evolved columns (the
-                # logged schema nulls them on read)
-                changes = changes.select(
-                    *[c for c in feed_cols if c in changes.columns]
-                )
-            elif any(c not in changes.columns for c in feed_cols):
-                # never-evolved feed receiving an OMITTING batch (a
-                # merge_schema append may legally drop existing columns):
-                # enter schema-logged mode so the logged schema nulls the
-                # omitted columns on read — selecting all feed_cols here
-                # would raise UNRESOLVED_COLUMN *after* the source table's
-                # version committed, permanently losing the change batch
-                # (ADVICE r9 #1)
-                schema = _nullable(feed_schema)
-                changes = changes.select(
-                    *[c for c in feed_cols if c in changes.columns]
-                )
-            else:
-                changes = changes.select(*feed_cols)
-            v, vdir = self._stage_version(cdc, changes)
-            stats = self._staged_append_stats(cdc, vdir)  # before linking
-            staged = self._staged_parquet_files(vdir)  # before linking
-            self._link_prev_files(cdc, vdir)
-            self._commit(cdc, v, "cdc-append", stats=stats, schema=schema)
-        else:
-            v = self._write_version(cdc, changes, op="cdc-append")
-            staged = self._staged_parquet_files(
-                os.path.join(self._dir(cdc), f"v{v}")
-            )
+        _, staged = self._append_version(
+            self._cdc_table(name), changes, "cdc-append", merge_schema=True
+        )
         # Append-only copy for streaming consumers (file source sees only
         # new files; see streaming/cdc.py). The staged feed files ARE this
         # commit's change rows, so hard-link them instead of re-running the
@@ -1578,12 +1475,6 @@ class TableStore:
                     os.link(path, dst)
                 except OSError:
                     shutil.copy2(path, dst)
-
-    @staticmethod
-    def _staged_parquet_files(vdir: str) -> list[str]:
-        import glob as _glob
-
-        return _glob.glob(os.path.join(vdir, "**", "*.parquet"), recursive=True)
 
     def _log_cdc(
         self,

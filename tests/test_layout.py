@@ -196,6 +196,27 @@ def test_hilbert_key_matches_bitwise_reference_at_16_bits(spark):
         assert r.hkey == _xy2d_ref(16, r.x, r.y), (r.x, r.y)
 
 
+def test_hilbert_key_passes_through_backtick_and_dot_names(spark):
+    """Passthrough columns are carried by quoted name through every
+    per-level projection: a name holding a backtick (or a dot) must come
+    out unchanged, with its values, beside the right key."""
+    from pyspark.sql import functions as F
+
+    from designing_data_warehouse_in_sql_server_spark.sources.layout import (
+        with_hilbert_key,
+    )
+
+    df = spark.createDataFrame([(1, 2, "p"), (3, 0, "q")], ["x", "y", "a`b"])
+    df = df.withColumnRenamed("y", "c.d")
+    got = with_hilbert_key(df, F.col("x"), F.col("`c.d`"), "hkey", bits=2)
+    assert got.columns == ["x", "c.d", "a`b", "hkey"]
+    rows = {r["a`b"]: (r["x"], r["c.d"], r["hkey"]) for r in got.collect()}
+    assert rows == {
+        "p": (1, 2, _xy2d_ref(2, 1, 2)),
+        "q": (3, 0, _xy2d_ref(2, 3, 0)),
+    }
+
+
 def test_hilbert_layout_prunes_both_dimensions(spark, tmp_path):
     """Same footer-statistics skipping check as the z-order twin: files
     range-partitioned on the Hilbert key carry per-file min/max ranges

@@ -138,15 +138,21 @@ def test_connected_components_path_and_islands(spark):
 
 
 def test_connected_components_convergence_guard(spark):
+    """A path that cannot converge in 1 round raises — and the raise
+    does not strand the edge relation or the last round's checkpoint:
+    no caller can read them, so their blocks are released first."""
     import pytest
     from designing_data_warehouse_in_sql_server_spark.operators.dedup_text import connected_components
 
-    # a 5-node path cannot converge in 1 round
+    jsc = spark.sparkContext._jsc
     pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5)], "id_a bigint, id_b bigint"
+        [(i, i + 1) for i in range(50)], "id_a bigint, id_b bigint"
     )
+    before = jsc.getPersistentRDDs().size()
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(pairs, max_iterations=1)
+    after = jsc.getPersistentRDDs().size()
+    assert after <= before, f"leaked checkpoints: {after - before}"
 
 
 def test_connected_components_releases_loop_checkpoints(spark):

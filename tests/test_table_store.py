@@ -744,8 +744,8 @@ def test_hive_partition_value_typing_matches_spark_literals():
 
 def test_append_history_stats_match_cold_walk(spark, tmp_path):
     """ADVICE r7: append commits carry (num_files, num_rows) from the
-    write path (previous memo + staged increment) instead of re-walking
-    the whole version. The carried numbers must equal what a COLD store
+    write path (staged files + the files the link walk carried over)
+    instead of re-walking the whole version. The carried numbers must equal what a COLD store
     (empty memo, full walk) computes for every version — and survive a
     vacuum in between."""
     from designing_data_warehouse_in_sql_server_spark.sources.table_store import (
@@ -769,8 +769,8 @@ def test_append_history_stats_match_cold_walk(spark, tmp_path):
 def test_append_history_stats_partitioned_with_cdc(spark, tmp_path):
     """The delta-carried commit stats must stay correct on the two
     harder append shapes: a hive-PARTITIONED table (staged files live in
-    partition subdirs; _link_prev_files merges per-file into dirs the
-    new write also touched) and a CDC-enabled table (each logical append
+    partition subdirs; _link_all merges per-file into dirs the new
+    write also touched) and a CDC-enabled table (each logical append
     also stage+links the shadow table — the exact path ADVICE r7 flagged
     as paying two O(table) walks). Every history row must equal a cold
     store's full walk, on the table AND its change feed."""
@@ -1057,11 +1057,11 @@ def test_restore_self_heals_crashed_staging_debris(spark, store, tmp_path):
 
 def test_no_commit_ever_rewalks_the_finished_version(spark, tmp_path, monkeypatch):
     """VERDICT r8: commit latency must not grow with table size via a
-    post-commit stats walk. Instrument _version_stats (the full-glob
-    fallback) and drive every write path — overwrite, append, pruned
-    merge, pruned update, restore, clone — on a partitioned CDC table:
-    the fallback must never fire, and every delta-carried history row
-    must still equal a cold store's full walk."""
+    post-commit stats walk. Instrument _version_stats (the full-version
+    walk) and drive every write path — overwrite, append, pruned merge,
+    pruned update, restore, clone, optimize, compact, truncate — on a
+    partitioned CDC table: the walk must never fire, and every
+    write-side history row must still equal a cold store's full walk."""
     from designing_data_warehouse_in_sql_server_spark.sources.table_store import (
         TableStore,
     )
@@ -1094,6 +1094,9 @@ def test_no_commit_ever_rewalks_the_finished_version(spark, tmp_path, monkeypatc
     v_now = store.current_version("t")
     store.restore("t", v_now - 1)
     store.clone("t", "t2")
+    store.optimize("t", ("id", "v"), target_files=2)
+    store.compact("t")
+    store.truncate("t")
     assert calls == [], f"_version_stats walked at commit time: {calls}"
 
     cold = TableStore(spark, root)
