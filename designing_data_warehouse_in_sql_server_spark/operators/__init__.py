@@ -1,7 +1,7 @@
 from .cleaning import cap_outliers_zscore, dedupe, impute_group_mean
 from .incremental import change_deltas, full_sum_count, refresh_incremental_agg
 from .scd2 import SCD2_OPEN_END, scd2_apply
-from .watermark import high_watermarks, mark_processed
+from .watermark import high_watermarks
 
 __all__ = [
     "cap_outliers_zscore",
@@ -13,5 +13,4 @@ __all__ = [
     "SCD2_OPEN_END",
     "scd2_apply",
     "high_watermarks",
-    "mark_processed",
 ]

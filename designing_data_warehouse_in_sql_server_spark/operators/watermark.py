@@ -3,7 +3,6 @@
 - high_watermarks: A3 (extract_weather.py:27-32) — per-key MAX(ts) with a
   fallback for unseen keys. The reference loops cities and issues one
   scalar query each; the scale form is ONE grouped aggregate for all keys.
-- mark_processed: M4 (transform_load.sql:73) — flip the staging flag.
 """
 
 from __future__ import annotations
@@ -40,8 +39,3 @@ def high_watermarks(
         )
     )
 
-
-def mark_processed(df: DataFrame, flag_col: str = "is_processed") -> DataFrame:
-    """Set the processed flag on every row (the reference updates ALL rows,
-    not just the batch — transform_load.sql:73 has no WHERE)."""
-    return df.withColumn(flag_col, F.lit(True))

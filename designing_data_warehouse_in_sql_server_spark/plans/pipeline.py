@@ -70,8 +70,10 @@ def extract(
     windows = [(r.city_name, r.start, r.end) for r in windows_df.collect()]  # 5 cities
     new_rows = extract_incremental(spark, fetcher, windows, load_ts)
     t0 = time.monotonic()
+    # rows appended = footer row counts after minus before (no job)
+    before = store.row_count(STG) if store.exists(STG) else 0
     v = store.append(STG, new_rows)
-    n = store.read(STG).filter(F.col("load_timestamp") == F.lit(load_ts).cast("timestamp_ntz")).count()
+    n = store.row_count(STG) - before
     _log_stage(store, load_ts, "extract", n, time.monotonic() - t0)
     return v
 

@@ -13,8 +13,8 @@ Engine design:
   ``arrays_zip`` + ``explode`` turns the parallel arrays into rows
   (SURVEY §2.1 S2 mapping) — all Catalyst expressions.
 - At 5 cities the fetch is a driver loop; at scale the same fetcher runs
-  per-partition via ``mapInPandas`` over a city DataFrame (same payload
-  column contract, see ``fetch_distributed``).
+  on executors, one input partition per city window, through the
+  ``weather_api`` Python DataSource (``WeatherApiDataSource``).
 """
 
 from __future__ import annotations
@@ -72,7 +72,7 @@ def open_meteo_fetcher(
 ) -> Fetcher:
     """Live fetcher for the Open-Meteo archive API (the reference's
     endpoint, extract_weather.py:39-54): returns a ``Fetcher`` suitable
-    for ``extract_incremental`` / ``fetch_distributed``.
+    for ``extract_incremental`` / the ``weather_api`` DataSource.
 
     ``transport(url) -> body`` defaults to ``requests`` when installed,
     else stdlib urllib — the engine never hard-depends on requests (this
@@ -177,29 +177,6 @@ def extract_incremental(
         return spark.createDataFrame([], payloads_to_rows(spark, [("x", "{}")]).schema)
     rows = payloads_to_rows(spark, payloads)
     return rows.withColumn("load_timestamp", F.lit(load_ts).cast("timestamp_ntz"))
-
-
-def fetch_distributed(cities: DataFrame, fetcher: Fetcher) -> DataFrame:
-    """Scale path: run the fetcher per-partition over a city DataFrame with
-    mapInPandas (one HTTP call per city row, executed on executors).
-
-    Input columns: city_name, start_date, end_date (strings).
-    Output: (city_name string, payload string).
-    """
-    import pandas as pd
-
-    def fetch_batch(batches):
-        for pdf in batches:
-            out = []
-            for city, start, end in zip(
-                pdf["city_name"], pdf["start_date"], pdf["end_date"]
-            ):
-                payload = fetch_with_retry(fetcher, city, start, end)
-                if payload is not None:
-                    out.append({"city_name": city, "payload": payload})
-            yield pd.DataFrame(out, columns=["city_name", "payload"])
-
-    return cities.mapInPandas(fetch_batch, "city_name string, payload string")
 
 
 # ---------------------------------------------------------------------------

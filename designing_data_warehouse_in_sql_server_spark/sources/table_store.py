@@ -5,9 +5,14 @@ same contract the reference gets from SQL Server tables (and that a
 cluster deployment would get from Delta — SURVEY.md §1.3): atomic
 overwrites, MERGE upserts, TRUNCATE, time travel, and a Change Data Feed.
 
-Layout:  <root>/<table>/v<N>/part-*.parquet  +  <root>/<table>/LATEST
+Layout:  <root>/<table>/v<N>/part-*.parquet  +  <root>/<table>/_schema/v<N>.json
+         +  <root>/<table>/LATEST
 The LATEST pointer is swapped with an atomic rename, so readers always
-see a complete version (snapshot isolation, writer-wins).
+see a complete version (snapshot isolation, writer-wins). Every commit
+logs its version's schema first, and every read hands that schema to the
+parquet reader: no footer sampling, no partition-directory type guessing
+(a string partition value '07' stays '07'), and no Spark job to open a
+table.
 
 Reference parity:
 - S5 append sink (extract_weather.py:57-67) -> append()
@@ -58,7 +63,6 @@ from __future__ import annotations
 
 import glob
 import os
-import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -68,10 +72,6 @@ CDC_INSERT = "insert"
 CDC_UPDATE_PRE = "update_preimage"
 CDC_UPDATE_POST = "update_postimage"
 CDC_DELETE = "delete"
-
-# _commit(schema=...) sentinel: carry the previous version's logged
-# schema forward (the default for schema-preserving operations).
-_SCHEMA_INHERIT = object()
 
 
 def _nullable(schema):
@@ -137,22 +137,11 @@ def _is_dup_key_error(ex: Exception) -> bool:
     return True
 
 
-# Literal shapes Spark's partition-type inference accepts. Python's
-# int()/float() are LAXER (underscores '1_000', 'nan'/'inf', 'infinity')
-# and typing a value Python-numerically that Spark reads as a string
-# would give the skipping manifest the wrong type — numeric-vs-string
-# comparisons then crash or mis-skip (r7 high review). Anchored regexes
-# mirror Spark: optional sign, plain digits for int; digits with a
-# decimal point and/or exponent for double.
-_HIVE_INT_RE = re.compile(r"^[+-]?\d+$")
-_HIVE_FLOAT_RE = re.compile(r"^[+-]?(\d+\.\d*|\.\d+|\d+)([eE][+-]?\d+)?$")
-
-
 def _hive_partition_raw(rel_path: str) -> dict:
     """Parse ``k=v`` directory segments of a file's version-relative path
     into RAW string partition values (URL-unescaped); the hive NULL
-    sentinel maps to None. Typing happens per VERSION, not per file —
-    see _resolve_partition_types."""
+    sentinel maps to None. collect_file_stats types them from the
+    version's logged schema."""
     from urllib.parse import unquote
 
     out: dict = {}
@@ -168,10 +157,9 @@ def _hive_partition_raw(rel_path: str) -> dict:
 def _stats_prune(entry_stats: dict, col: str, lo, hi) -> bool:
     """True only when the manifest PROVES the file lies outside
     [lo, hi]. Conservative on every doubt: missing stats keep the file,
-    and a cross-type comparison (a string stat against a numeric probe
-    — possible against a manifest written before per-version type
-    resolution, or a probe typed differently than the partition values)
-    keeps the file instead of raising (ADVICE r7)."""
+    and a cross-type comparison (a string stat against a numeric probe,
+    i.e. a probe typed differently than the column) keeps the file
+    instead of raising (ADVICE r7)."""
     if col not in entry_stats:
         return False
     smin, smax = entry_stats[col]
@@ -179,33 +167,6 @@ def _stats_prune(entry_stats: dict, col: str, lo, hi) -> bool:
         return smax < lo or smin > hi
     except TypeError:
         return False
-
-
-def _resolve_partition_types(raw_maps: list[dict]) -> dict:
-    """ONE inferred type per partition column across ALL files of a
-    version, the way Spark's partition discovery resolves a common type
-    per column (ADVICE r7: per-file typing let p=42 land as int stats
-    beside p=a42 as string stats in the same manifest; a range probe
-    then compared int against str in Python and raised TypeError).
-    Lattice: int if every non-null value matches Spark's int literal
-    shape, else float if every value parses numerically, else string
-    for the whole column."""
-    rank = {int: 0, float: 1, str: 2}
-    types: dict = {}
-    for raw in raw_maps:
-        for k, v in raw.items():
-            if v is None:
-                continue
-            if _HIVE_INT_RE.match(v):
-                t = int
-            elif _HIVE_FLOAT_RE.match(v):
-                t = float
-            else:
-                t = str
-            cur = types.get(k)
-            if cur is None or rank[t] > rank[cur]:
-                types[k] = t
-    return types
 
 
 class TableStore:
@@ -278,7 +239,7 @@ class TableStore:
         version: int,
         op: str,
         stats: tuple[int, int],
-        schema=_SCHEMA_INHERIT,
+        schema,
     ) -> None:
         # schema log BEFORE the pointer swap: a committed version must
         # never be visible without the schema a reader needs for it
@@ -294,38 +255,33 @@ class TableStore:
         return os.path.join(self._schema_dir(name), f"v{version}.json")
 
     def _log_schema(self, name: str, version: int, schema) -> None:
-        """Maintain the per-version schema log. A table enters
-        schema-logged mode at its first evolution; before that no files
-        exist and reads infer from (uniform) parquet footers exactly as
-        always — zero behavior change for never-evolved tables.
-        ``schema`` is a StructType (log it), None (explicitly no schema
-        for this version — e.g. a restore to a pre-evolution target), or
-        the _SCHEMA_INHERIT sentinel (carry v-1's log forward, if any)."""
-        if schema is _SCHEMA_INHERIT:
-            schema = self.table_schema(name, version - 1)
-        if schema is None:
-            return
+        """Log ``schema`` (a StructType) as the schema of ``version``:
+        the columns and types every later read of that version uses."""
         os.makedirs(self._schema_dir(name), exist_ok=True)
         _atomic_write(self._schema_path(name, version), schema.json())
 
     def table_schema(self, name: str, version: int | None = None):
-        """The LOGGED schema of a version (None when the version predates
-        any evolution — readers then infer from the uniform files). The
-        log, not parquet footers, is what makes evolved reads O(1)
-        metadata at 100 TB: Spark's mergeSchema option would distribute
-        a footer-reading job over every file of every version."""
+        """The LOGGED schema of a version (default: the current one). The
+        log, not parquet footers, is what keeps opening a table O(1)
+        metadata at 100 TB: footer inference runs a Spark job per read,
+        and Spark's mergeSchema option would distribute one over every
+        file of the version. Raises FileNotFoundError for a missing
+        table or a version without a log entry."""
         import json as _json
 
         from pyspark.sql.types import StructType
 
         v = version if version is not None else self.current_version(name)
         if v is None:
-            return None
+            raise FileNotFoundError(f"table {name!r} does not exist in {self.root}")
+        path = self._schema_path(name, v)
         try:
-            with open(self._schema_path(name, v)) as fh:
+            with open(path) as fh:
                 raw = fh.read()
         except FileNotFoundError:
-            return None
+            raise FileNotFoundError(
+                f"table {name!r} version {v} has no schema log: {path}"
+            ) from None
         try:
             return StructType.fromJson(_json.loads(raw))
         except (ValueError, KeyError, TypeError) as exc:
@@ -395,13 +351,12 @@ class TableStore:
     def time_travel(self, name: str, version: int) -> DataFrame:
         """Read a specific historical version (Delta time-travel analog;
         covers the reference's system-versioned dim history, README.md:91).
-        Post-evolution versions read with the LOGGED schema (files written
-        before a column existed simply yield nulls for it — the parquet
-        reader resolves by name); pre-evolution versions read by footer
-        inference exactly as before."""
-        sch = self.table_schema(name, version)
-        reader = self.spark.read if sch is None else self.spark.read.schema(sch)
-        return reader.parquet(os.path.join(self._dir(name), f"v{version}"))
+        Reads with the version's LOGGED schema: files written before a
+        column existed yield nulls for it (the parquet reader resolves by
+        name) and hive partition values take their logged types."""
+        return self.spark.read.schema(self.table_schema(name, version)).parquet(
+            os.path.join(self._dir(name), f"v{version}")
+        )
 
     def row_count(self, name: str) -> int:
         """Exact row count of the current version from parquet FOOTERS —
@@ -501,7 +456,11 @@ class TableStore:
                 df = self.time_travel(name, v).limit(0)
             else:
                 vdir = os.path.join(self._dir(name), f"v{v}")
-                df = self.spark.read.option("basePath", vdir).parquet(*files)
+                df = (
+                    self.spark.read.schema(self.table_schema(name, v))
+                    .option("basePath", vdir)
+                    .parquet(*files)
+                )
             # pad columns the other version has: typed NULLs, so the
             # null-safe compare and old_/new_ projection stay uniform
             pads = [
@@ -670,19 +629,13 @@ class TableStore:
 
     def _write_version(self, name: str, df: DataFrame, op: str) -> int:
         """Full-content write: stage ``df`` as the next version and commit
-        it; nothing is carried over from the previous version."""
+        it; nothing is carried over from the previous version, the logged
+        schema included — an overwrite may legitimately RESHAPE the table,
+        so the version logs the shape it wrote."""
         v, vdir = self._stage_version(name, df)
-        stats = self._staged_stats(vdir)
-        # In schema-logged mode every full-content write re-logs the
-        # written shape (an overwrite may legitimately RESHAPE the
-        # table; inheriting the old log would impose phantom columns).
-        # Never-evolved tables stay out of schema-logged mode entirely.
-        schema = (
-            _nullable(df.schema)
-            if self.exists(name) and self.table_schema(name) is not None
-            else _SCHEMA_INHERIT
+        self._commit(
+            name, v, op, stats=self._staged_stats(vdir), schema=_nullable(df.schema)
         )
-        self._commit(name, v, op, stats=stats, schema=schema)
         return v
 
     def _link_untouched(self, name: str, vdir: str) -> tuple[int, int]:
@@ -798,8 +751,9 @@ class TableStore:
         links), then commit with those stats. Returns the new version and
         its staged files — the rows this commit itself wrote."""
         prev = self.current_version(name)
-        schema = _SCHEMA_INHERIT
-        if prev is not None:
+        if prev is None:
+            schema = _nullable(df.schema)
+        else:
             df, schema = self._aligned(name, df, merge_schema)
         v, vdir = self._stage_version(name, df)
         staged = _parquet_files(vdir)  # before linking: this commit's files
@@ -813,29 +767,28 @@ class TableStore:
     def _aligned(self, name: str, df: DataFrame, merge_schema: bool):
         """(df, schema): the increment with its columns in the stored
         order (a metadata-only select) and the schema to log for the new
-        version — _SCHEMA_INHERIT unless ``merge_schema`` evolves it.
-        Fails loud on a mismatch first: a silent select() would drop
-        misnamed/extra increment columns without any error."""
-        prev_schema = self.table_schema(name) or _nullable(self.read(name).schema)
+        version — the previous version's log unless ``merge_schema``
+        evolves it. Fails loud on a mismatch first: a silent select()
+        would drop misnamed/extra increment columns without any error."""
+        prev_schema = self.table_schema(name)
         stored = [f.name for f in prev_schema.fields]
         extra = set(df.columns) - set(stored)
         missing = set(stored) - set(df.columns)
-        schema = _SCHEMA_INHERIT
+        schema = prev_schema
         inc_by_name = {f.name: f for f in _nullable(df.schema).fields}
-        if merge_schema:
-            # evolution adds columns; it never retypes an existing one —
-            # checked for EVERY shared column, not only when the shape
-            # changed (a same-shape increment with a retyped column
-            # would otherwise stage unreadable files)
-            for f in prev_schema.fields:
-                g = inc_by_name.get(f.name)
-                if g is not None and g.dataType != f.dataType:
-                    raise ValueError(
-                        f"append to '{name}': column {f.name!r} type change "
-                        f"{f.dataType.simpleString()} -> "
-                        f"{g.dataType.simpleString()} (evolution adds "
-                        "columns, it never retypes them)"
-                    )
+        # an append never retypes a column, with or without merge_schema:
+        # checked for EVERY shared column, since staged files of another
+        # type would contradict the logged schema every read uses.
+        # simpleString ignores nested nullability, which is not a type.
+        for f in prev_schema.fields:
+            g = inc_by_name.get(f.name)
+            if g is not None and g.dataType.simpleString() != f.dataType.simpleString():
+                raise ValueError(
+                    f"append to '{name}': column {f.name!r} type change "
+                    f"{f.dataType.simpleString()} -> "
+                    f"{g.dataType.simpleString()} (evolution adds "
+                    "columns, it never retypes them)"
+                )
         if extra or missing:
             if not merge_schema:
                 raise ValueError(
@@ -914,10 +867,9 @@ class TableStore:
         if os.path.isdir(vdir):
             shutil.rmtree(vdir)
         stats = self._link_all(src, vdir)
-        # the restored version adopts the TARGET's schema state — the
-        # logged schema of v_target if it had one, or none at all for a
-        # pre-evolution target (a restore across an evolution boundary
-        # rolls the schema back with the content, as Delta RESTORE does)
+        # the restored version adopts the TARGET's logged schema (a
+        # restore across an evolution boundary rolls the schema back with
+        # the content, as Delta RESTORE does)
         self._commit(
             name, v, "restore", stats=stats, schema=self.table_schema(name, version)
         )
@@ -997,12 +949,13 @@ class TableStore:
             )
         want_cdc = capture_cdc and self._feed_exists(name)
 
-        v, vdir = self._stage_version(name, updated.drop("__upd"))
+        staged = updated.drop("__upd")
+        v, vdir = self._stage_version(name, staged)
         stats = self._staged_stats(vdir)
         if pruned:
             linked = self._link_untouched(name, vdir)
             stats = (stats[0] + linked[0], stats[1] + linked[1])
-        self._commit(name, v, "update", stats=stats)
+        self._commit(name, v, "update", stats=stats, schema=_nullable(staged.schema))
         if want_cdc:
             # pre/post images of matching rows only (match evaluated on the
             # OLD values — the flag is computed before the SET is applied)
@@ -1119,6 +1072,7 @@ class TableStore:
         import json as _json
 
         import pyarrow.parquet as _pq
+        from pyspark.sql.types import FractionalType, IntegralType
 
         v = self.current_version(name)
         if v is None:
@@ -1128,21 +1082,22 @@ class TableStore:
         manifest: dict = {"version": v, "columns": columns, "files": []}
         # hive partition columns live in directory names, not footers —
         # and they are the most natural skipping target on a partitioned
-        # table: each k=v segment is an exact [v, v] stat. Typing is
-        # resolved ONCE per version across all files (Spark-discovery
-        # semantics), so a column mixing numeric-looking and non-numeric
-        # directory values gets uniform string stats, never int-beside-str
-        raw_parts = {
-            path: _hive_partition_raw(os.path.relpath(path, vdir)) for path in files
+        # table: each k=v segment is an exact [v, v] stat, typed by the
+        # column's LOGGED type (the type every read gives it), so a string
+        # column's '07' stays '07' and never meets a numeric stat
+        ptypes = {
+            f.name: int if isinstance(f.dataType, IntegralType)
+            else float if isinstance(f.dataType, FractionalType)
+            else str
+            for f in self.table_schema(name, v).fields
         }
-        ptypes = _resolve_partition_types(list(raw_parts.values()))
         for path in files:
             md = _pq.ParquetFile(path).metadata
             idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
             rel = os.path.relpath(path, vdir)
             part_vals = {
                 k: (None if raw is None else ptypes[k](raw))
-                for k, raw in raw_parts[path].items()
+                for k, raw in _hive_partition_raw(rel).items()
             }
             entry: dict = {
                 "path": rel,
@@ -1215,14 +1170,12 @@ class TableStore:
         # basePath keeps hive partition-directory columns in the schema
         # when only a subset of leaf files is read — without it a
         # partitioned table's partition columns would silently vanish.
-        # The FULL table's schema is pinned explicitly (r8 review): a
-        # string partition column whose kept subset happens to be all
-        # numeric-looking ('42' kept, 'a42' pruned) would otherwise be
-        # re-inferred as int over the subset, flipping the residual
-        # filter from string to numeric comparison semantics — a
-        # silently different answer than read().filter().
+        # The version's logged schema is pinned, as on every read (r8
+        # review): a string partition column whose kept subset happens to
+        # be all numeric-looking ('42' kept, 'a42' pruned) keeps string
+        # comparison semantics in the residual filter.
         return (
-            self.spark.read.schema(self.read(name).schema)
+            self.spark.read.schema(self.table_schema(name, v))
             .option("basePath", vdir)
             .parquet(*keep)
             .filter(between)
@@ -1289,16 +1242,19 @@ class TableStore:
         v = (self.current_version(name) or 0) + 1
         vdir = os.path.join(self._dir(name), f"v{v}")
         keyed = frames[curve](df, zorder_by[0], zorder_by[1])
-        writer = (
+        staged = (
             keyed.repartitionByRange(target_files, *spec, "__zkey")
             .sortWithinPartitions(*spec, "__zkey")
             .drop("__zkey")
-            .write.mode("overwrite")
         )
+        writer = staged.write.mode("overwrite")
         if spec:
             writer = writer.partitionBy(*spec)
         writer.parquet(vdir)
-        self._commit(name, v, "optimize", stats=self._staged_stats(vdir))
+        self._commit(
+            name, v, "optimize", stats=self._staged_stats(vdir),
+            schema=_nullable(staged.schema),
+        )
         self.collect_file_stats(
             name, list(zorder_by) + [c for c in spec if c not in zorder_by]
         )
@@ -1408,8 +1364,9 @@ class TableStore:
         )
         result = joined.select(*out_cols, action.alias("__action"))
 
+        staged = result.drop("__action")
         try:
-            v, vdir = self._stage_version(name, result.drop("__action"))
+            v, vdir = self._stage_version(name, staged)
         except Exception as ex:
             if _is_dup_key_error(ex):
                 raise ValueError(f"merge source has duplicate keys on {on}") from None
@@ -1418,7 +1375,7 @@ class TableStore:
         if pruned:
             linked = self._link_untouched(name, vdir)
             stats = (stats[0] + linked[0], stats[1] + linked[1])
-        self._commit(name, v, "merge", stats=stats)
+        self._commit(name, v, "merge", stats=stats, schema=_nullable(staged.schema))
         # CDC after the main commit: a failure here can lose a feed entry
         # for a committed version, never record one for a phantom version.
         if capture_cdc:

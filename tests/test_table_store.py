@@ -307,6 +307,10 @@ def test_append_rejects_schema_mismatch(spark, store):
     missing = spark.createDataFrame([(3,)], "id int")
     with pytest.raises(ValueError, match="missing columns.*v"):
         store.append("fail_loud", missing)
+    # an append never retypes a column, with or without merge_schema
+    retyped = spark.createDataFrame([(5, "e")], "id bigint, v string")
+    with pytest.raises(ValueError, match="never retypes"):
+        store.append("fail_loud", retyped)
     # matching set but different order still appends (select aligns)
     reordered = spark.createDataFrame([("c", 4)], "v string, id int")
     store.append("fail_loud", reordered)
@@ -700,46 +704,99 @@ def test_diff_unpruned_duplicate_key_and_schema_evolution(spark, tmp_path):
         store.diff("t", v1, v3, on=["w"])
 
 
-def test_hive_partition_value_typing_matches_spark_literals():
-    """Partition-value typing must follow Spark's literal shapes, not
-    Python's laxer parsers (r7 high review): '1_000', 'nan', 'inf',
-    'Infinity' are STRINGS to Spark's partition discovery — typing them
-    numerically would give the skipping manifest the wrong type and
-    numeric-vs-string probes would crash or mis-skip. Since r8 typing
-    resolves per VERSION (ADVICE r7): one column type across all files,
-    the way Spark's partition discovery resolves a common type."""
-    from designing_data_warehouse_in_sql_server_spark.sources.table_store import (
-        _hive_partition_raw,
-        _resolve_partition_types,
+def test_file_stats_type_partition_values_from_logged_schema(spark, tmp_path):
+    """The skipping manifest types each hive partition value by the
+    column's LOGGED type, never by the look of the directory name:
+    '1_000', 'nan', '-42', '1e3' in a string column stay strings; an
+    int column gives ints, a double column floats (its 1e3 written as
+    1000.0, its NaN as NaN); the hive NULL sentinel gives no stat."""
+    import math
+
+    store = TableStore(spark, str(tmp_path / "store"))
+    df = spark.createDataFrame(
+        [
+            (1, "1_000", -42, 1e3),
+            (2, "nan", 1000, float("nan")),
+            (3, "-42", None, -42.0),
+            (4, "1e3", 7, None),
+            (5, None, 0, 2.5),
+        ],
+        "id long, s string, i int, d double",
     )
+    store.overwrite("t", df, partition_by=["s", "i", "d"])
+    manifest = store.collect_file_stats("t", ["id", "s", "i", "d"])
+    by_id = {}
+    for e in manifest["files"]:
+        lo, hi = e["stats"]["id"]
+        assert lo == hi
+        by_id[lo] = e["stats"]
 
-    def typed(rel):
-        raw = _hive_partition_raw(rel)
-        types = _resolve_partition_types([raw])
-        return {
-            k: (None if v is None else types[k](v)) for k, v in raw.items()
-        }
+    def stat(row_id, col):
+        got = by_id[row_id].get(col)
+        if got is not None:
+            assert got[0] == got[1] or math.isnan(got[0])
+            return got[0]
+        return None
 
-    assert typed("code=1_000/x.parquet") == {"code": "1_000"}
-    for raw in ("nan", "inf", "Infinity", "-inf", "1_0.5"):
-        assert typed(f"k={raw}/f.parquet") == {"k": raw}, raw
-    assert typed("k=-42/f.parquet") == {"k": -42}
-    assert typed("k=+7/f.parquet") == {"k": 7}
-    assert typed("k=3.5/f.parquet") == {"k": 3.5}
-    assert typed("k=.5/f.parquet") == {"k": 0.5}
-    assert typed("k=1e3/f.parquet") == {"k": 1000.0}
-    assert typed("k=__HIVE_DEFAULT_PARTITION__/f.parquet") == {"k": None}
+    assert [stat(r, "s") for r in range(1, 6)] == ["1_000", "nan", "-42", "1e3", None]
+    assert [stat(r, "i") for r in range(1, 6)] == [-42, 1000, None, 7, 0]
+    assert all(type(stat(r, "i")) is int for r in (1, 2, 4, 5))
+    assert stat(1, "d") == 1000.0 and math.isnan(stat(2, "d"))
+    assert stat(3, "d") == -42.0 and stat(4, "d") is None and stat(5, "d") == 2.5
+    assert all(type(stat(r, "d")) is float for r in (1, 2, 3, 5))
+    # string probes on the string column compare string to string
+    # (the NULL partition has no stat, so its file is kept)
+    assert store.skipping_file_counts("t", "s", "-", "1_001") == (3, 5)
+    got = {r.id for r in store.read_skipping("t", "s", "-", "1_001").collect()}
+    assert got == {1, 3}
 
-    # per-VERSION resolution: one file's non-numeric value makes the
-    # whole column string; int beside float widens to float; the hive
-    # NULL sentinel doesn't influence the type
-    raws = [_hive_partition_raw(p) for p in (
-        "p=42/a.parquet", "p=a42/b.parquet", "q=1/a.parquet",
-        "q=2.5/b.parquet", "r=__HIVE_DEFAULT_PARTITION__/a.parquet",
-        "r=7/b.parquet",
-    )]
-    types = _resolve_partition_types(raws)
-    assert types == {"p": str, "q": float, "r": int}
+
+def test_numeric_looking_string_partition_keeps_type_through_merge(spark, store):
+    """A string partition column whose values look numeric reads back as
+    string ('07', not 7), and a merge into p='07' rewrites that partition
+    in place. With footer/directory inference the read typed p as int 7
+    and the merge wrote a p=7/ directory beside the hard-linked p=07/,
+    so key 2 appeared twice."""
+    store.overwrite(
+        "t",
+        _df(spark, [(1, "42", "a"), (2, "07", "b")], "k int, p string, v string"),
+        partition_by=["p"],
+    )
+    t = store.read("t")
+    assert dict(t.dtypes)["p"] == "string"
+    assert {r.k: r.p for r in t.collect()} == {1: "42", 2: "07"}
+    store.merge(
+        "t", _df(spark, [(2, "07", "B")], "k int, p string, v string"), on=["k"]
+    )
+    rows = store.read("t").collect()
+    assert len(rows) == 2
+    assert {r.k: (r.p, r.v) for r in rows} == {1: ("42", "a"), 2: ("07", "B")}
+
+
+def test_reads_launch_no_spark_job(spark, store):
+    """read() and time_travel() take the schema from the version's log,
+    so opening a table is driver-side metadata only: no footer-sampling
+    job, for plain and hive-partitioned tables alike."""
+    store.overwrite("t", _df(spark, [(1, "a")]))
+    store.append("t", _df(spark, [(2, "b")]))
+    store.overwrite("pt", _df(spark, [(1, "a"), (2, "b")]), partition_by=["v"])
+    sc = spark.sparkContext
+    group = "table-store-reads-launch-no-job"
+    sc.setJobGroup(group, "reads of a TableStore")
+    try:
+        schemas = [
+            store.read("t").schema,
+            store.time_travel("t", 1).schema,
+            store.read("pt").schema,
+        ]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [s.simpleString() for s in schemas] == [
+        "struct<k:int,v:string>",
+        "struct<k:int,v:string>",
+        "struct<k:int,v:string>",
+    ]
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_append_history_stats_match_cold_walk(spark, tmp_path):
